@@ -16,9 +16,11 @@ the tree it runs from.
 from __future__ import annotations
 
 import argparse
+import ctypes
 import json
 import os
 import shutil
+import signal
 import subprocess
 import sys
 from statistics import median
@@ -30,14 +32,68 @@ ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench_work")
 WORKLOADS = ["extract_mixed", "extract_blobs"]
 SETUPS = 3  # set-ups per untraced run; setup_s is their median
-# the timed plan is still warming up (JIT, G1 sizing) on its first call
-# after the check pass; that call is checked but not timed
-WARM_CALLS = 1
+# the timed plan is still warming up (JIT, G1 sizing) on its first two
+# calls after the check pass (each about 15% slower than the calls after
+# them); those calls are checked but not timed
+WARM_CALLS = 2
 MIN_ITERATIONS = 3
 # a traced run reports no end-to-end metrics: one set-up, and two untraced
 # iterations as the baseline for the tracing overhead
 TRACED_BASELINE_ITERATIONS = 2
 TRACED_ITERATIONS = 1
+
+
+PR_SET_CHILD_SUBREAPER = 36  # from <linux/prctl.h>
+
+
+def _become_subreaper() -> None:
+    """Have orphaned descendants re-parented to this process instead of
+    init: the Python workers' daemon outlives the JVM that forked it, and
+    ``_reap_descendants`` must be able to stop and wait for it."""
+    try:
+        ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+    except (OSError, AttributeError):
+        pass
+
+
+def _exit_on_signal(signum, frame) -> None:
+    # unwinds through every ``finally``, so the clean-up below still runs
+    raise SystemExit(128 + signum)
+
+
+def _reap_descendants(grace: float = 10.0) -> None:
+    """Stop every process this one started, directly or not, and wait until
+    each has ended: SIGTERM first, SIGKILL after ``grace`` seconds."""
+    from multiprocessing import resource_tracker
+    from tracing import descendants
+
+    # the reference pool's resource tracker ignores SIGTERM; it exits when
+    # its pipe closes
+    stop = getattr(resource_tracker._resource_tracker, "_stop", None)
+    if stop is not None:
+        try:
+            stop()
+        except OSError:
+            pass
+    deadline = time.monotonic() + grace
+    while True:
+        pids = descendants(os.getpid())
+        if not pids:
+            return
+        sig = signal.SIGTERM if time.monotonic() < deadline else signal.SIGKILL
+        for pid in pids:
+            try:
+                os.kill(pid, sig)
+            except OSError:
+                pass
+        time.sleep(0.05)
+        while True:
+            try:
+                pid, _ = os.waitpid(-1, os.WNOHANG)
+            except ChildProcessError:
+                break
+            if pid == 0:
+                break
 
 
 def _confine_to_tree() -> None:
@@ -73,8 +129,11 @@ class Context:
         from pyspark import SparkContext
 
         if self.spark is not None:
-            self.spark.stop()
-            self.spark = None
+            spark, self.spark = self.spark, None
+            try:
+                spark.stop()
+            except Exception:  # a call into the JVM was cut short; stop it anyway
+                traceback.print_exc()
         gateway = SparkContext._gateway
         if gateway is None:
             return
@@ -271,8 +330,18 @@ def main(argv=None) -> int:
 
 
 if __name__ == "__main__":
+    _become_subreaper()
+    for signum in (signal.SIGTERM, signal.SIGINT, signal.SIGHUP):
+        signal.signal(signum, _exit_on_signal)
+    code = 1
     try:
-        sys.exit(main())
+        code = main()
+    except SystemExit as exc:
+        code = exc.code if isinstance(exc.code, int) else 1
     except Exception:
         traceback.print_exc()
-        sys.exit(1)
+    finally:
+        for signum in (signal.SIGTERM, signal.SIGINT, signal.SIGHUP):
+            signal.signal(signum, signal.SIG_IGN)
+        _reap_descendants()
+    sys.exit(code)

@@ -8,8 +8,10 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import signal
 import subprocess
 import sys
+import time
 
 import pandas as pd
 import pytest
@@ -36,6 +38,22 @@ def _result(p: subprocess.CompletedProcess) -> dict:
     return json.loads(p.stdout.strip().splitlines()[-1])
 
 
+def _leftovers() -> list[str]:
+    """Processes still running with a run's environment: every process a
+    run starts (JVM, Python workers, resource tracker) inherits its TMPDIR."""
+    mark = f"TMPDIR={os.path.join(run.WORK, 'tmp')}".encode()
+    found = []
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/environ", "rb") as f:
+                if mark in f.read().split(b"\0"):
+                    with open(f"/proc/{pid}/cmdline", "rb") as c:
+                        found.append(f"{pid} {c.read()[:120]!r}")
+        except OSError:
+            pass
+    return found
+
+
 @pytest.mark.parametrize("workload", [w["name"] for w in BENCH["workloads"]])
 def test_workload_runs_end_to_end(workload):
     res = _result(_run("--workload", workload, "--seed", "5", "--seconds", "1",
@@ -44,6 +62,7 @@ def test_workload_runs_end_to_end(workload):
     assert res["correct"] and res["failed"] == 0 and res["attempted"] >= 1
     assert set(res["metrics"]) == {m["name"] for m in BENCH["end_to_end"]}
     assert all(m["value"] > 0 for m in res["metrics"].values())
+    assert not _leftovers()
 
 
 def test_traced_run_reports_every_layer():
@@ -53,6 +72,27 @@ def test_traced_run_reports_every_layer():
     units = {m["name"]: m["unit"] for m in BENCH["per_layer"]}
     assert {k: v["unit"] for k, v in res["metrics"].items()} == units
     assert res["metrics"]["runner.buckets_redone"]["value"] == workloads.N_BUCKETS - workloads.FAIL_BUCKET
+    assert not _leftovers()
+
+
+def test_terminated_run_leaves_no_process():
+    p = subprocess.Popen([sys.executable, "perfbench/run.py", "--workload", "extract_mixed",
+                          "--seed", "8", "--seconds", "1", "--trace", "0", "--size", "toy"],
+                         cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
+    try:
+        deadline = time.monotonic() + 300
+        # wait until the JVM has forked its Python workers' daemon
+        while not any("pyspark.daemon" in l for l in _leftovers()) and time.monotonic() < deadline:
+            assert p.poll() is None
+            time.sleep(0.5)
+        p.terminate()
+        out, _ = p.communicate(timeout=120)
+    finally:
+        p.kill()
+        p.wait()
+    assert p.returncode == 128 + signal.SIGTERM
+    assert '"metrics"' not in out
+    assert not _leftovers()
 
 
 def test_fails_without_the_library(tmp_path):
@@ -76,6 +116,7 @@ def ctx():
     c.start(warm)
     yield c
     c.stop()
+    run._reap_descendants()  # the reference pool's resource tracker
     shutil.rmtree(c.data_dir, ignore_errors=True)
 
 

@@ -100,6 +100,17 @@ def _children(pid: int) -> list[int]:
     return out
 
 
+def descendants(pid: int) -> list[int]:
+    """Every process below ``pid``: its children, theirs, and so on."""
+    out: list[int] = []
+    todo = _children(pid)
+    while todo:
+        child = todo.pop()
+        out.append(child)
+        todo.extend(_children(child))
+    return out
+
+
 def _comm(pid: int) -> str:
     try:
         with open(f"/proc/{pid}/comm") as f:
@@ -135,12 +146,9 @@ class RssSampler:
         me = os.getpid()
         while not self._stop.is_set():
             by_kind: dict[str, int] = {}
-            todo = _children(me)
-            while todo:
-                pid = todo.pop()
+            for pid in descendants(me):
                 kind = "java" if _comm(pid) == "java" else "python"
                 by_kind[kind] = by_kind.get(kind, 0) + _rss_kb(pid)
-                todo.extend(_children(pid))
             total = sum(by_kind.values())
             if total > self.peak_kb:
                 self.peak_kb, self.peak_kb_by_kind = total, by_kind
