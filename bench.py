@@ -754,6 +754,45 @@ def run_stress() -> dict:
         spark.stop()
 
 
+SUMMARY_KEYS = (
+    "metric",
+    "value",
+    "unit",
+    "sf",
+    "turns_parsed",
+    "turns_per_sec",
+    "spans_emitted",
+    "cores",
+)
+SUMMARY_MAX_QUERIES = 25
+SUMMARY_MAX_CHARS = 1900
+
+
+def summary_line(rec: dict) -> str:
+    """Second, SHORT summary line printed LAST: the bench record is
+    parsed from a 2000-char tail of stdout, and the full per-query dict
+    (100+ entries) outgrew it once, leaving BENCH_r04.json with
+    parsed=null. The line carries the headline keys plus up to
+    SUMMARY_MAX_QUERIES of the slowest timings; the fastest of those
+    are dropped until it is shorter than SUMMARY_MAX_CHARS. If the headline
+    alone does not fit, raises ValueError — an explicit check, so
+    ``python -O`` cannot strip it."""
+    head = {k: rec[k] for k in SUMMARY_KEYS}
+    head["n_queries"] = len(rec["queries"])
+    slowest = sorted(rec["queries"].items(), key=lambda kv: -kv[1])[:SUMMARY_MAX_QUERIES]
+    for k in range(len(slowest), -1, -1):
+        line = json.dumps(
+            {
+                **head,
+                "queries": dict(slowest[:k]),
+                "queries_shown": f"{k} slowest of n_queries; full dict on prior line",
+            }
+        )
+        if len(line) < SUMMARY_MAX_CHARS:
+            return line
+    raise ValueError(f"summary line too long without any timings ({len(line)} chars)")
+
+
 def main() -> None:
     if "--stress" in sys.argv:
         print(json.dumps(run_stress()))
@@ -790,34 +829,7 @@ def main() -> None:
     try:
         rec = run_bench(spark, SF_DIR)
         print(json.dumps(rec))
-        # Second, SHORT summary line printed LAST (round-4 fix): the
-        # driver keeps only a 2000-char tail of stdout, and the full
-        # per-query dict (100+ entries) outgrew it in round 4, leaving
-        # BENCH_r04.json with parsed=null. The final line carries the
-        # headline keys plus the slowest-query subset and always fits
-        # the tail window, so the per-round record stays parseable.
-        slowest = dict(
-            sorted(rec["queries"].items(), key=lambda kv: -kv[1])[:25]
-        )
-        summary = {
-            k: rec[k]
-            for k in (
-                "metric",
-                "value",
-                "unit",
-                "sf",
-                "turns_parsed",
-                "turns_per_sec",
-                "spans_emitted",
-                "cores",
-            )
-        }
-        summary["n_queries"] = len(rec["queries"])
-        summary["queries"] = slowest
-        summary["queries_shown"] = "25 slowest of n_queries; full dict on prior line"
-        line = json.dumps(summary)
-        assert len(line) < 1900, f"summary line too long ({len(line)} chars)"
-        print(line)
+        print(summary_line(rec))
     finally:
         spark.stop()
 

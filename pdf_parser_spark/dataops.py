@@ -3733,7 +3733,9 @@ def _sa_self_dup_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 toks = token_re.findall(text.lower())
                 n = len(toks)
-                if n < 2 * m:
+                # two occurrences of an m-token repeat may overlap
+                # ("x x x" repeats "x x"), so m + 1 tokens can hold one
+                if n <= m:
                     continue
                 sa = sorted(range(n), key=lambda i: toks[i:])
                 covered = np.zeros(n, dtype=bool)

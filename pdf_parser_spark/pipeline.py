@@ -334,6 +334,16 @@ def extract_turns(
     spreads across ``salt_buckets`` tasks, then ONE Arrow-batched
     kernel stage.
 
+    The kernel stage runs ``partitions`` Python tasks, by default one
+    per core (``defaultParallelism``). Each Python task carries a fixed
+    worker cost of about 0.35 s of task time, whatever its row count:
+    on 4 cores a 6,000-row no-op ``mapInPandas`` takes 0.57 / 1.74 /
+    5.79 s at 4 / 16 / 64 tasks (BENCH.md). On 4 cores one task per
+    core beat four per core up to 58k mixed turns, and at 1M opaque
+    2 KB turns the two were level (13.7 s against 14.1 s), so no
+    straggler penalty showed; the salt still spreads a giant
+    conversation over every task. Other core counts are unmeasured.
+
     Ordering the window before the kernel (instead of after) keeps the
     heavy nested ``blocks``/``spans`` structs out of every shuffle: the
     two exchanges move only the raw transcript rows. At 100 TB the
@@ -341,10 +351,10 @@ def extract_turns(
     second shuffle was the old plan's dominant JVM cost (GC on nested
     Arrow rows); turn_seq is identical either way."""
     if partitions is None:
-        # 4 tasks per core for the Python-bound kernel stage: fine
-        # granularity smooths stragglers (a heavy conv's salt buckets
-        # land in different tasks) and keeps all workers busy to the end
-        partitions = 4 * transcripts.sparkSession.sparkContext.defaultParallelism
+        # one Python task per core: every extra task adds its fixed
+        # worker cost (pyspark re-reads its zip's directory per task);
+        # on 4 cores, up to 1M turns, no straggler saving offset it
+        partitions = transcripts.sparkSession.sparkContext.defaultParallelism
     order_w = Window.partitionBy("conv_id").orderBy("turn_idx")
     with_seq = transcripts.withColumn(
         "turn_seq", F.row_number().over(order_w).cast("int")

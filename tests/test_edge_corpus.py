@@ -35,6 +35,7 @@ EDGE_DOCS = [
     (9, "word " + "b" * 300 + " tail", "fr", "edge"),  # one giant token
     (10, "Tab\tand\nnewline  spacing.", "en", "edge"),
     (11, "ünïcödé diacritics straße œuvre", "es", "edge"),
+    (12, "x x x", "en", "edge"),                     # overlapping 2-token repeat
 ]
 
 # the barrier-staged / short-doc-guarded members at the all-docs
@@ -68,6 +69,7 @@ OTHER_GRAIN = [
     "collocations",
     "ngram_topk",
     "dup_spans",
+    "dup_spans_sa",
     "stratified_sample",
     "domain_cap",
     "sequence_pack",
@@ -123,6 +125,31 @@ def test_edge_corpus_matches_oracle(spark, edge_dir, name):
             a[float_cols], b[float_cols], check_dtype=False,
             check_exact=False, rtol=1e-9, atol=1e-9,
         )
+
+
+def test_sa_self_repeats_match_gram_census(spark, edge_dir):
+    """The suffix-array kernel covers exactly the positions the
+    oracle's within-doc m-gram census covers, on every edge doc. "x x x"
+    holds two overlapping "x x" occurrences in m + 1 tokens; q_dup_spans_sa
+    drops its 3-token span (DUP_SPAN_MIN_TOKENS), so only its coverage
+    shows whether the two engines agree on it."""
+    import re
+    from collections import Counter
+
+    from pdf_parser_spark.dataops import SA_MIN_REPEAT, TOKEN_RE, _sa_self_dup_positions
+
+    m = SA_MIN_REPEAT
+    want = set()
+    for doc_id, text, _, _ in EDGE_DOCS:
+        toks = re.findall(TOKEN_RE, text.lower())
+        grams = [tuple(toks[i : i + m]) for i in range(len(toks) - m + 1)]
+        counts = Counter(grams)
+        for i, g in enumerate(grams):
+            if counts[g] >= 2:
+                want.update((doc_id, p) for p in range(i, i + m))
+    got = {(r["doc_id"], r["pos"]) for r in _sa_self_dup_positions(spark, edge_dir).collect()}
+    assert {(12, 0), (12, 1), (12, 2)} <= want
+    assert got == want
 
 
 EMB_QUERIES = [

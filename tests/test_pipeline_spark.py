@@ -125,6 +125,34 @@ class TestOrderingAndSalt:
         )
         assert len(parts) >= 4, f"heavy conv in only {len(parts)} partitions"
 
+    def test_default_kernel_stage_is_one_task_per_core(self, spark):
+        """By default the kernel stage runs one Python task per core:
+        each task costs a fixed worker set-up, so more tasks than cores
+        only add that cost. The rows equal those of a 16-task call, and
+        the salt still spreads the heavy conversation over every task."""
+        df = synth_transcripts_df(spark, n_convs=50, seed=42, heavy_every=50, heavy_factor=40)
+        cores = spark.sparkContext.defaultParallelism
+        default = extract_turns(df, include_blocks=False).withColumn(
+            "pid", F.spark_partition_id()
+        ).cache()
+        try:
+            pids = {r["pid"] for r in default.select("pid").distinct().collect()}
+            assert pids == set(range(cores))
+            heavy = {
+                r["pid"]
+                for r in default.filter(F.col("conv_id") == "conv_000049")
+                .select("pid").distinct().collect()
+            }
+            assert heavy == pids, f"heavy conv in {len(heavy)} of {cores} partitions"
+            cols = ["conv_id", "turn_idx", "turn_seq", "extracted_text", "spans"]
+            got = sorted(map(tuple, default.select(cols).collect()))
+        finally:
+            default.unpersist()
+        want = sorted(
+            map(tuple, extract_turns(df, partitions=16, include_blocks=False).select(cols).collect())
+        )
+        assert got == want
+
     def test_result_independent_of_input_order(self, spark):
         rows = synth_transcripts(n_convs=6, seed=7)
         df1 = spark.createDataFrame(

@@ -116,3 +116,26 @@ def test_every_bench_name_resolves():
 
     missing = [n for n in bench.BENCH_QUERIES if n not in bench.QUERIES]
     assert not missing, f"BENCH_QUERIES names not in bench.QUERIES: {missing}"
+
+
+def test_bench_summary_line_fits_or_raises():
+    """bench.py's last stdout line must fit the 2000-char tail it is
+    parsed from: the fastest of the shown timings are dropped until it
+    does, and a headline that cannot fit raises, also under
+    ``python -O``."""
+    import json
+
+    import bench
+
+    rec = {k: 0 for k in bench.SUMMARY_KEYS}
+    rec["queries"] = {f"query_{i:03d}_{'x' * 60}": float(i) for i in range(113)}
+    line = bench.summary_line(rec)
+    assert len(line) < bench.SUMMARY_MAX_CHARS
+    shown = json.loads(line)["queries"]
+    assert 0 < len(shown) < bench.SUMMARY_MAX_QUERIES
+    assert sorted(shown.values()) == [float(i) for i in range(113 - len(shown), 113)]
+    small = dict(rec, queries={"a": 1.0, "b": 2.0})
+    assert json.loads(bench.summary_line(small))["queries"] == {"b": 2.0, "a": 1.0}
+    huge = dict(rec, metric="m" * bench.SUMMARY_MAX_CHARS)
+    with pytest.raises(ValueError, match="too long"):
+        bench.summary_line(huge)
